@@ -38,11 +38,10 @@ object Bench {
     "cls1_nb_model", "al1_uncertain_topk", "f1_phone_clean",
     "r1_asof_join", "bpe1_pair_merge")
 
-  /** The cross-query one-time memo builds a full run primes and times
-    * as their OWN lines (so member-query timings stay order-
-    * independent): the gr2–gr8 co-purchase edge list and the
-    * pipe5/pipe6/pipe9/pipe10 per-doc verdict relations (r11 verdict
-    * #6). The middle element is the memo's CONSUMER short-keys: a
+  /** The cross-query one-time [[Memo]] builds a full run primes and
+    * times as their OWN lines (so member-query timings stay order-
+    * independent); the last element builds the line's memos in order.
+    * The middle element is the line's CONSUMER short-keys: a
     * partial run (--quick or named queries) that selects any consumer
     * primes-and-times the memo too, so the build cost appears as its
     * own line instead of silently landing on (or vanishing from,
@@ -50,25 +49,26 @@ object Bench {
     * gate-coverage spec derives BENCH_X10.json's expected key set
     * from these names — add a memo here and the gate re-runs or the
     * suite goes red, by construction. */
-  private[graft] val memoBuilds: Seq[(String, Set[String], (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    ("memo_copurchase_edges",
-      Set("gr2", "gr3", "gr4", "gr5", "gr6", "gr7", "gr8"),
-      (s, d) => graft.operators.GraphOps.primeEdgeMemo(s, d)),
-    ("memo_pipeline_perdoc",
-      Set("pipe5", "pipe6", "pipe9", "pipe10"),
-      (s, d) => graft.operators.PipelineOps.primePipeMemos(s, d)),
-    ("memo_dedup_sigs",
-      Set("d2", "d7", "d10", "d12", "d13", "d14", "d15", "d17", "leak1"),
-      (s, d) => graft.operators.DedupOps.primeDedupMemos(s, d)),
-    // r17 (guide §1.2 — remove duplicate corpus passes): the NB
-    // doc-score relation was rebuilt per consumer query — four
-    // identical three-scan model+serve passes per full run (cls2,
-    // cls4, cal1, al1); a bm25-pass memo was measured and REVERTED
-    // (no consumer gain — qr1's per-query persist already bounds the
-    // rebuild; see the qr1 scaladoc NO-GO note)
-    ("memo_nb_scores",
-      Set("cls2", "cls4", "cal1", "al1"),
-      (s, d) => graft.operators.RetrievalOps.primeNbMemo(s, d)))
+  private[graft] val memoBuilds: Seq[(String, Set[String], (org.apache.spark.sql.SparkSession, String) => Unit)] = {
+    import graft.operators.{DedupOps, GraphOps, PipelineOps, RetrievalOps}
+    def inOrder(memos: Memo[_]*): (org.apache.spark.sql.SparkSession, String) => Unit =
+      (s, d) => memos.foreach(_(s, d))
+    Seq(
+      ("memo_copurchase_edges",
+        Set("gr2", "gr3", "gr4", "gr5", "gr6", "gr7", "gr8"),
+        inOrder(GraphOps.artifacts)),
+      // independent builds (different source scans, no shared subtree)
+      ("memo_pipeline_perdoc",
+        Set("pipe5", "pipe6", "pipe9", "pipe10"),
+        (s, d) => Memo.overlap(PipelineOps.pipe5PerDoc(s, d), PipelineOps.pipe6Hits(s, d))),
+      ("memo_dedup_sigs",
+        Set("d2", "d7", "d10", "d12", "d13", "d14", "d15", "d17", "leak1"),
+        inOrder(DedupOps.signatures, DedupOps.bandedCandidates, DedupOps.d2Pairs,
+          DedupOps.verdicts)),
+      ("memo_nb_scores",
+        Set("cls2", "cls4", "cal1", "al1"),
+        inOrder(RetrievalOps.nbDocScores)))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -114,7 +114,10 @@ object Bench {
       }.map { case (name, _, prime) =>
         val t0 = System.nanoTime()
         val t = try { prime(spark, sfDir); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable =>
+          System.err.println(s"[graft] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          -1.0
+        }
         name -> t
       }
     // THREE timed runs per query, min reported, spread recorded —

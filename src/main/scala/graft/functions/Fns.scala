@@ -57,18 +57,6 @@ object Fns {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** L2 norm of a double array (sequential accumulation). */
-  def l2(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity of two double arrays, rounded to 6 places so the
-    * cross-engine compare is insensitive to sub-ulp accumulation noise.
-    */
-  def cosine6(a: Column, b: Column): Column = {
-    val prod = l2(a) * l2(b)
-    when(prod === 0.0, lit(Double.NaN))
-      .otherwise(round(dot(a, b) / prod, 6))
-  }
-
   /** Fixed-dimension dot product, fully unrolled: Spark's higher-order
     * functions (zip_with/aggregate) evaluate interpreted, which
     * dominates quadratic similarity joins; a flat left-associated

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.functions.Fns._
 
 /** Deduplication operators for a large-scale training-data pipeline:
@@ -46,74 +46,25 @@ object DedupOps {
     * ceiling for a task-side broadcast map. */
   private[graft] val D2_BROADCAST_MAX_DOCS = 2000000L
 
-  /** Per-session memo of the verified near-dup pair table, keyed by
-    * (session, data dir). d2 exposes the pairs, d7 consumes them as
-    * its edge set, and pipelines run both — without the memo d7
-    * re-runs the whole shingle→minhash→band-join→verify pipeline just
-    * to produce edges it already has. The value is an eagerly
-    * localCheckpoint'ed DataFrame: lineage is truncated, the blocks
-    * live in executor storage (never the driver), and they're freed
-    * when the entry is dropped or the session ends. Bench/Verify
-    * implications are recorded in SCALE.md (warm vs cold numbers).
-    * Keyed on (session, path, [[Tables.versionStamp]]) so an in-
-    * session rewrite of the dataset invalidates the entry (the
-    * verdictMemo/edgeMemo staleness discipline). */
-  private val pairMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop memoized pair tables (e.g. between cold
-    * timing runs). */
-  private[graft] def clearPairMemo(): Unit = pairMemo.clear()
-
   /** d2 — MinHash + LSH near-dup: bigram shingles → 8 minhashes → 4
     * bands of 2 → equi-join on (band, band-key) → exact Jaccard ≥ 0.5
     * on the candidates only. The LSH band join is what makes this
-    * linear-ish at scale: docs only meet if a band collides.
-    */
-  private def d2(s: SparkSession, d: String): DataFrame = d2Pairs(s, d)
+    * linear-ish at scale: docs only meet if a band collides. Memoized:
+    * d7 consumes the pairs as its edge set; d10, d13 and d15 read them
+    * too. */
+  private[graft] val d2Pairs = new Memo[DataFrame]("memo_dedup_sigs/d2_pairs", "documents")(
+    computeD2Pairs(_, _, D2_BROADCAST_MAX_DOCS))
 
-  /** Memoized face of [[computeD2Pairs]] — see [[pairMemo]]. */
-  private[graft] def d2Pairs(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(pairMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      computeD2Pairs(s, d, D2_BROADCAST_MAX_DOCS))
+  /** The MinHash signature table (doc_id, sh, mh, content_fp); d2,
+    * d10, d12, d13, d14 and the candidate build consume it. */
+  private[graft] val signatures = new Memo[DataFrame]("memo_dedup_sigs/signatures", "documents")(
+    buildSignatures)
 
-  /** The O(N) MinHash signature table (doc_id, sh, mh) — the distinct
-    * bigram shingle set as 8-byte md5-long KEYS (never the strings;
-    * ~10× smaller checkpoint payload, see [[buildSignatures]]) + 8
-    * seeded minhashes per doc. Signature
-    * computation is a typed kernel: 8 seeded md5 minhashes over every
-    * shingle is pure dense hashing, which interpreted higher-order
-    * expressions evaluate ~10x slower (the declarative minhash
-    * combinator lives in graft.functions.Fns for small-k uses).
-    * MEMOIZED per (session, dir) as an eagerly localCheckpoint'ed
-    * table, like [[pairMemo]]: d2, d7, d10 and any pipeline composing
-    * them all consume the same signatures, and a real pipeline
-    * materializes them exactly once per corpus version. Checkpoint
-    * (not persist): the blocks live in executor storage with lineage
-    * truncated, survive `catalog.clearCache()` (which drops every
-    * CacheManager entry between bench queries), and free when the
-    * memo entry drops or the session ends. At cluster scale this is
-    * a checkpoint of signatures, never of the corpus. Version-stamp
-    * keyed like [[pairMemo]] — an in-session dataset rewrite gets
-    * fresh signatures. */
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop memoized signature tables (e.g. between
-    * cold timing runs). */
-  private[graft] def clearSigMemo(): Unit = sigMemo.clear()
-
-  /** Probe/bench hook: build just the signature memo. */
-  private[graft] def primeSigOnly(s: SparkSession, d: String): Unit = {
-    signatures(s, d); ()
-  }
-
-  private def signatures(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(sigMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      buildSignatures(s, d))
-
+  /** Signatures are a typed kernel: 8 seeded md5 minhashes over every
+    * shingle is dense hashing, which interpreted higher-order
+    * expressions evaluate ~10× slower (the declarative minhash
+    * combinator lives in graft.functions.Fns for small-k uses). The
+    * shingle set is stored as 8-byte md5-long keys, never strings. */
   private def buildSignatures(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d)
@@ -197,23 +148,11 @@ object DedupOps {
         element_at(col("mh"), b * 2 + 2).as("m2")))).as("bk"))
       .select(col("doc_id"), col("bk.band"), col("bk.m1"), col("bk.m2"))
 
-  /** Per-session memo of the banded candidate pair table — the LSH
-    * band self-join is byte-identical between d2's Jaccard verify
-    * and d12's containment verify (same bands, same distinct), and
-    * it is the expensive half of both (the signature table's four
-    * plan branches + a distinct over band collisions). Memoized as
-    * its own eager checkpoint of int-pair rows (VERDICT r12 #7:
-    * d12's isolated 1.5 s was mostly this rebuild). */
-  private val candMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop memoized candidate tables. */
-  private[graft] def clearCandMemo(): Unit = candMemo.clear()
-
-  /** The distinct banded candidate pairs (i < j) — see [[candMemo]]. */
-  private[graft] def bandedCandidates(s: SparkSession, d: String): DataFrame =
-    Tables.memoGetOrBuild(candMemo, s, d,
-      Tables.versionStamp(d, "documents")) {
+  /** The distinct banded candidate pairs (i < j) — the LSH band
+    * self-join shared byte-identically by d2's Jaccard verify and d12's
+    * containment verify. */
+  private[graft] val bandedCandidates = new Memo[DataFrame]("memo_dedup_sigs/candidates", "documents")(
+    (s, d) => {
       val bands = bandKeys(signatures(s, d))
       bands.as("x")
         .join(bands.as("y"),
@@ -222,7 +161,7 @@ object DedupOps {
         .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
         .distinct()
         .localCheckpoint(true)
-    }
+    })
 
   private[graft] def computeD2Pairs(s: SparkSession, d: String,
       broadcastMaxDocs: Long): DataFrame = {
@@ -269,10 +208,8 @@ object DedupOps {
           })
           .toDF("i", "j", "jac")
       }
-    // eager checkpoint: materializes the (small) pair table,
-    // truncates lineage for d7's iterative consumer, and backs the
-    // pairMemo reuse (the signature table itself stays in sigMemo for
-    // the session — d10 and recomputations share it)
+    // eager checkpoint: materializes the (small) pair table and
+    // truncates lineage for d7's iterative consumer
     verified.localCheckpoint(true)
   }
 
@@ -803,51 +740,10 @@ object DedupOps {
     * short-circuit on the 8-byte fingerprint (LeftSemi, no payload);
     * near verification is unconditionally the shuffle-join path —
     * incremental dedup IS the large-corpus regime, nothing
-    * corpus-sized belongs on the driver. */
-  /** Per-session memo of the d10 verdict table — the sigMemo/
-    * pairMemo discipline applied to verdicts: d10 exposes them,
-    * leak1 aggregates them, and a pipeline running both must pay the
-    * band-join + verification exactly once per corpus version. The
-    * stored relation is (doc_id, 7-char verdict) — signature-class
-    * narrow. Keyed on (session, path, [[Tables.versionStamp]]) so a
-    * dataset REWRITTEN at the same path within a session gets fresh
-    * verdicts, never stale ones (the ADVICE r9 staleness hole);
-    * entries persist for the session (verdict-sized), with
-    * [[clearVerdictMemo]] for long-lived drivers. */
-  private val verdictMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** Test/bench hook: drop memoized verdict tables. */
-  private[graft] def clearVerdictMemo(): Unit = verdictMemo.clear()
-
-  /** Bench hook: eagerly build the three shared dedup memos —
-    * signatures, the d2 pair table, the d10 verdict table — so their
-    * one-time cost is a bench line of its own (`memo_dedup_sigs`)
-    * instead of landing on whichever of d2/d7/d10/d12/d13/d14/d15/
-    * d17/leak1 runs first (the primeEdgeMemo discipline, VERDICT r12
-    * #7: d12's isolated 1.55 s was mostly this build). */
-  private[graft] def primeDedupMemos(s: SparkSession, d: String): Unit = {
-    // per-step stderr timings: the memo line is the single largest
-    // bench entry, so its internal split must stay measurable
-    // (VERDICT r13 #6) — these lines ride stderr like the partial-run
-    // report and never touch the stdout JSON contract
-    def step(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      System.err.println(
-        f"[graft]   memo_dedup_sigs/$name%-16s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    step("signatures") { signatures(s, d); () }
-    step("candidates") { bandedCandidates(s, d); () }
-    step("d2_pairs") { d2Pairs(s, d); () }
-    step("d10_verdicts") { d10(s, d); () }
-  }
-
-  private def d10(s: SparkSession, d: String): DataFrame =
-    // eager checkpoint: verdicts are consumed repeatedly downstream
-    Tables.memoGetOrBuild(verdictMemo, s, d,
-      Tables.versionStamp(d, "documents"))(
-      d10Plan(s, d).localCheckpoint(true))
+    * corpus-sized belongs on the driver. Memoized (doc_id, verdict)
+    * rows; leak1 consumes them too. */
+  private[graft] val verdicts = new Memo[DataFrame]("memo_dedup_sigs/d10_verdicts", "documents")(
+    d10Plan(_, _).localCheckpoint(true))
 
   /** The lazy d10 plan — split out so PlanShapeSpec can assert the
     * PRE-checkpoint physical plan (after localCheckpoint the plan is
@@ -867,8 +763,7 @@ object DedupOps {
     * (NewOpsSpec: "directional banding loses no cross-split pair and
     * invents none"). */
   private[graft] def d10Plan(s: SparkSession, d: String): DataFrame =
-    d10Plan(s, d, reusePairs =
-      pairMemo.contains((s, d, Tables.versionStamp(d, "documents"))))
+    d10Plan(s, d, reusePairs = d2Pairs.contains(s, d))
 
   private[graft] def d10Plan(s: SparkSession, d: String,
       reusePairs: Boolean): DataFrame = {
@@ -1214,7 +1109,7 @@ object DedupOps {
     * refinement here adds one hash on the 8-byte doc key and a
     * 6-row aggregate over that narrow relation. */
   private def leak1(s: SparkSession, d: String): DataFrame =
-    d10(s, d)
+    verdicts(s, d)
       .withColumn("split",
         when(md5Long(col("doc_id")) % 100 < 90, "val").otherwise("test"))
       .groupBy(col("split"), col("verdict"))
@@ -1457,13 +1352,13 @@ object DedupOps {
     "d11_line_dedup" -> (d11 _),
     "d16_line_width_curve" -> (d16 _),
     "d17_cluster_histogram" -> (d17 _),
-    "d10_incremental_dedup" -> (d10 _),
+    "d10_incremental_dedup" -> verdicts,
     "d9_substring_spans" -> (d9 _),
     "d6_minhash_udaf" -> (d6 _),
     "d7_dedup_components" -> (d7 _),
     "d8_semantic_dedup" -> (d8 _),
     "d1_exact_dedup" -> (d1 _),
-    "d2_minhash_lsh" -> (d2 _),
+    "d2_minhash_lsh" -> d2Pairs,
     "d3_simhash" -> (d3 _),
     "d4_ngram_jaccard" -> (d4 _),
     "d5_embedding_neardup" -> (d5 _)

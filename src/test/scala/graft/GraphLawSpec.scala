@@ -22,6 +22,8 @@ import graft.operators.GraphOps
 class GraphLawSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+  // the oracle's own gate SF, where the wedge stream is non-trivial
+  private val gateSf = "/root/testdata/sf0.01"
 
   private def labelSet(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -119,10 +121,8 @@ class GraphLawSpec extends SparkSpec {
 
   test("gr3's broadcast anti join equals the bloom-split form " +
     "(r18 — definite U settled = anti-join-all, ORDER included)") {
-    // the gate-scale corpus (sf0.01 — the oracle's own gate SF) so the
-    // wedge stream is non-trivial; collect ordered rows, not sets: the
-    // top-K ORDER is part of the contract
-    val gateSf = "/root/testdata/sf0.01"
+    // collect ordered rows, not sets: the top-K ORDER is part of the
+    // contract
     def rows(bcast: Boolean): Seq[(Long, Long, Long)] =
       GraphOps.gr3TopK(spark, gateSf, bcastAnti = bcast)
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -130,6 +130,7 @@ class GraphLawSpec extends SparkSpec {
     assert(split.nonEmpty)
     assert(rows(bcast = true) == split,
       "gr3 broadcast-anti diverges from the bloom-split form")
+    GraphOps.releaseScratch()
     spark.catalog.clearCache()
   }
 
@@ -140,7 +141,6 @@ class GraphLawSpec extends SparkSpec {
     assert(GraphOps.GR5_ROUNDS == 2,
       "GR5_ROUNDS changed — the frontier-only NO-GO must be re-proved")
     import graft.Tables
-    val gateSf = "/root/testdata/sf0.01"
     val ip = Tables.lineitem(spark, gateSf)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
     val e = ip.select(col("o"), col("p").as("pa"))
