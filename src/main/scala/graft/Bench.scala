@@ -141,10 +141,8 @@ object Bench {
     // SPARK_GRAFT_BENCH_RUNS overrides the per-query run count (the
     // x100 probe uses 2 — at 60M-row inputs a third run buys little
     // precision for a lot of wall; official records keep the default)
-    // malformed values fail LOUDLY before any query runs (ADVICE r14:
-    // a bare .toInt inside the run loop would crash mid-bench; worse,
-    // a malformed ROUND inside the archive's catch-all silently
-    // skipped the round archive)
+    // malformed values fail LOUDLY before any query runs (a bare
+    // .toInt inside the run loop would crash mid-bench)
     val nRuns = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_RUNS").map { v =>
         require(scala.util.Try(v.toInt).isSuccess,
@@ -214,50 +212,8 @@ object Bench {
     val fullLine =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"queries":$fullQs,"spread":$spreads,"sf":"$sfDir"}"""
     if (wanted.isEmpty)
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-          (fullLine + "\n").getBytes("UTF-8"))
-        // per-round archive (VERDICT r12 #4: BENCH_FULL.json is
-        // overwritten each round, making per-query regression diffs
-        // impossible). The round number comes from SPARK_GRAFT_ROUND
-        // when set (ADVICE r13: the max+1 heuristic can mislabel when
-        // a BENCH_r<N>.json lands between runs, and silently archives
-        // NOTHING on a fresh checkout); the fallback stays
-        // max(BENCH_r<N>)+1, and a skipped archive now says so.
-        // SPARK_GRAFT_NO_ARCHIVE opts out: scale_probe's x10 benches
-        // save/restore BENCH_FULL.json but must not overwrite the
-        // round archive with probe-dir numbers.
-        if (!sys.env.contains("SPARK_GRAFT_NO_ARCHIVE")) {
-          // an unparsable SPARK_GRAFT_ROUND routes to the explicit
-          // SKIPPED message — never the max+1 inference (which could
-          // mislabel) and never a throw inside this catch-all (ADVICE
-          // r14: the throw silently skipped the archive, defeating
-          // the "a skipped archive says so" rule)
-          val round = sys.env.get("SPARK_GRAFT_ROUND") match {
-            case Some(v) => scala.util.Try(v.toInt).toOption
-              .toRight(s"SPARK_GRAFT_ROUND is not an int: '$v'")
-            case None =>
-              val re = "BENCH_r(\\d+)\\.json".r
-              val ns = Option(new java.io.File(".").listFiles())
-                .getOrElse(Array.empty[java.io.File])
-                .flatMap(f => f.getName match {
-                  case re(n) => Some(n.toInt)
-                  case _ => None
-                })
-              if (ns.isEmpty)
-                Left("no SPARK_GRAFT_ROUND and no BENCH_r<N>.json to infer from")
-              else Right(ns.max + 1)
-          }
-          round match {
-            case Right(n) =>
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(f"BENCH_FULL_r$n%02d.json"),
-                (fullLine + "\n").getBytes("UTF-8"))
-            case Left(why) =>
-              System.err.println(s"[graft] round archive SKIPPED: $why")
-          }
-        }
-      }
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+        (fullLine + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () } // read-only cwd must not fail the bench
     else
       // partial run: per-query (and per-memo) times for local

@@ -86,19 +86,6 @@ object OsmChunk {
     false
   }
 
-  /** Earliest top-level element start at or after `from` in `buf`
-    * (comment/CDATA-blind — the single-window helper the boundary
-    * unit spec exercises; [[findCuts]] is the stateful scanner the
-    * chunker actually uses), or -1. */
-  private[osm] def nextBoundary(buf: Array[Byte], from: Int, len: Int): Int = {
-    var i = math.max(from, 0)
-    while (i < len) {
-      if (buf(i) == '<' && isBoundary(buf, i, len)) return i
-      i += 1
-    }
-    -1
-  }
-
   /** ONE sequential pass over the file: for each ascending target
     * offset, the first top-level element start AT OR AFTER it that is
     * not inside a comment or CDATA section. The full scan (rather

@@ -12,7 +12,7 @@ class BucketingSpec extends SparkSpec {
 
   test("partitioned writes prune partitions at the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    Tables.events(spark, "/root/testdata/sf0.001")
+    Tables.events(spark, sf)
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir)
       .filter(col("event_type") === "click")
@@ -21,14 +21,12 @@ class BucketingSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters"), plan)
     assert(plan.contains("event_type"), plan)
     // only the click partition's rows are read
-    val expected = Tables.events(spark, "/root/testdata/sf0.001")
+    val expected = Tables.events(spark, sf)
       .filter(col("event_type") === "click").count()
     assert(q.agg(sum(col("cnt"))).collect().head.getLong(0) == expected)
   }
 
   test("bucketed-by-join-key tables join without a shuffle exchange") {
-    val sf = "/root/testdata/sf0.001"
-
     Tables.orders(spark, sf).write
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .mode("overwrite").saveAsTable("orders_b")
@@ -37,8 +35,7 @@ class BucketingSpec extends SparkSpec {
       .mode("overwrite").saveAsTable("lineitem_b")
 
     // disable auto-broadcast so the join would otherwise shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("lineitem_b")
         .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
@@ -54,7 +51,6 @@ class BucketingSpec extends SparkSpec {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(viaBuckets == direct)
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
@@ -63,10 +59,8 @@ class BucketingSpec extends SparkSpec {
   test("m3Materialize writes ref_docs bucketed by the part key — a " +
     "part-keyed consumer join plans no exchange on the materialized " +
     "side, and the stored rows equal the live m3 query") {
-    val sf = "/root/testdata/sf0.001"
     graft.operators.RelationalOps.m3Materialize(spark, sf, "ref_docs_b", 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("ref_docs_b")
         .join(Tables.part(spark, sf),
           col("l_partkey") === col("p_partkey"))
@@ -80,9 +74,6 @@ class BucketingSpec extends SparkSpec {
       // partition-parallel write: more than one data file (no coalesce)
       val files = spark.table("ref_docs_b").inputFiles
       assert(files.length > 1, files.mkString(","))
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS ref_docs_b")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS ref_docs_b")
   }
 }

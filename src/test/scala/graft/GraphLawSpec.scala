@@ -21,7 +21,6 @@ import graft.operators.GraphOps
   */
 class GraphLawSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
   // the oracle's own gate SF, where the wedge stream is non-trivial
   private val gateSf = "/root/testdata/sf0.01"
 
@@ -34,21 +33,16 @@ class GraphLawSpec extends SparkSpec {
     // (a) broadcast wherever size allows (generous threshold),
     // (b) no broadcast, shuffled-hash preferred,
     // (c) no broadcast, sort-merge forced.
-    def under(confs: (String, String)*)(body: => Set[(Long, Long)]) = {
-      val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-    }
-    val bcast = under(
+    val bcast = withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString) {
       labelSet(GraphOps.gr5Labels(spark, sf))
     }
-    val shj = under(
+    val shj = withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.join.preferSortMergeJoin" -> "false") {
       labelSet(GraphOps.gr5Labels(spark, sf))
     }
-    val smj = under(
+    val smj = withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.join.preferSortMergeJoin" -> "true") {
       labelSet(GraphOps.gr5Labels(spark, sf))

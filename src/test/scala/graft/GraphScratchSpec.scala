@@ -21,8 +21,6 @@ import graft.operators.GraphOps
   */
 class GraphScratchSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   private def run(name: String): Unit = {
     SparkEntry.queries(name)(spark, sf).queryExecution.toRdd.count(); ()
   }

@@ -18,8 +18,6 @@ import graft.operators.SimilarityOps
   * oracle would catch it at sf0.01. */
 class IvfPqSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   test("s8 ivfpq: the fused model-as-literal kernel index serves " +
     "row-identically to the declarative model-as-join twin") {
     val served: Set[Row] =

@@ -8,10 +8,6 @@ package graft
   */
 class NbMemoSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   test("nb memo sharing: cls2/cls4/cal1/al1 produce identical output " +
     "cold (memo just cleared) and warm (memo primed via the Bench " +
     "hook), and the memoized relation survives catalog.clearCache()") {

@@ -8,10 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class NewOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   test("j8: the salted join is observationally the plain join — salt " +
     "spreads rows across tasks without inventing or dropping matches") {
     val salted = q("j8_salted_join").collect()

@@ -20,8 +20,6 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType, BinaryType}
   */
 class OutputContractSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   test("every SparkEntry.queries output schema is scalar-only " +
     "(array/map/struct results break the driver's pandas compare — " +
     "serialize through Fns.strJoin)") {

@@ -14,8 +14,6 @@ import graft.operators.PipelineOps
   */
 class PipeKernelLawSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   /** The r12 declarative twin of [[PipelineOps.computePipe5PerDoc]] —
     * token-run census via array_sort + filter + zip_with HOFs. Kept
     * HERE (not in main) as the law's reference implementation. */

@@ -10,8 +10,6 @@ import org.apache.spark.sql.DataFrame
   */
 class PlanShapeSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
@@ -26,9 +24,6 @@ class PlanShapeSpec extends SparkSpec {
         a.executedPlan
       case other => other
     }
-
-  private def q(name: String): DataFrame =
-    SparkEntry.queries(name)(spark, sf)
 
   test("equality filter is pushed into the parquet scan (p2)") {
     val p = plan(q("p2_eq_match"))
@@ -91,9 +86,9 @@ class PlanShapeSpec extends SparkSpec {
     assert(exec.toString.contains("format_phone"), exec.toString)
     // the generated stage must actually compile: CODEGEN_ONLY makes a
     // Janino failure throw instead of silently falling back
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try assert(df.limit(5).collect().length == 5)
-    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+      assert(df.limit(5).collect().length == 5)
+    }
   }
 
   test("anti-join stays a LeftAnti (j6) — no payload, no multiplication") {
@@ -147,16 +142,12 @@ class PlanShapeSpec extends SparkSpec {
     "second side (j5) — asserted on the FINAL adaptive plan with the " +
     "broadcast path disabled (at real scale the table exceeds the " +
     "threshold and this SMJ shape is what runs)") {
-    // restore whatever the suite was running with, not a hardcoded
-    // default — a changed session config must survive this test
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = q("j5_self_join")
       df.collect() // AQE only materializes exchange reuse at runtime
       val p = plan(df)
       assert(p.contains("ReusedExchange"), p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("global hash sample plans TakeOrderedAndProject — per-task " +
@@ -227,9 +218,7 @@ class PlanShapeSpec extends SparkSpec {
     "auto-broadcast disabled it degrades to a merge join, proving the " +
     "vocabulary-sized df side is never hint-broadcast past the " +
     "planner's size check (AQE elects broadcast only when it fits)") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = q("x10_tfidf")
       val p = plan(df)
       assert(p.contains("SortMergeJoin"), p)
@@ -241,16 +230,14 @@ class PlanShapeSpec extends SparkSpec {
       assert(physical(df).collect {
         case g: org.apache.spark.sql.execution.GenerateExec => g
       }.isEmpty, p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("j8's join keys carry the salt — with broadcast disabled the " +
     "sort-merge join hashes on (suppkey, salt), so a hot supplier " +
     "spreads over J8_SALTS shuffle partitions instead of one task") {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = q("j8_salted_join")
       val smj = physical(df).collect { case j: SortMergeJoinExec => j }
       assert(smj.nonEmpty, plan(df))
@@ -259,7 +246,7 @@ class PlanShapeSpec extends SparkSpec {
       }).toSet
       assert(keyNames.contains("fsalt") && keyNames.contains("l_suppkey"),
         s"join keys $keyNames\n" + plan(df))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("lr1's serve pass is exchange-free (model-as-literals scoring " +
@@ -482,9 +469,7 @@ class PlanShapeSpec extends SparkSpec {
     "unify the consumers: each join key infers a different isnotnull " +
     "pushdown) — and the scoring join carries no broadcast hint, " +
     "degrading to sort-merge with the broadcast path disabled (x12)") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = q("x12_bigram_lm")
       val p = plan(df)
       // the tokenize kernel lives only inside tf's cached definition —
@@ -497,7 +482,7 @@ class PlanShapeSpec extends SparkSpec {
       // SortMergeJoin here proves the joins degrade gracefully
       assert(p.contains("SortMergeJoin"), p)
       assert(!p.contains("CartesianProduct"), p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("incremental dedup probes exact fingerprints with a LeftSemi " +
@@ -569,23 +554,11 @@ class PlanShapeSpec extends SparkSpec {
   test("dsir1's vocabulary-sized LLR join carries NO broadcast hint — " +
     "it degrades to a term-keyed merge join when broadcast is off " +
     "(a forced hint would survive the threshold)") {
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe =
-      spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan(q("dsir1_importance"))
       assert(p.contains("SortMergeJoin"), p)
       assert(!p.contains("CartesianProduct"), p)
-    } finally {
-      // restore BOTH keys symmetrically — unset only what was unset,
-      // so a session-level override set by another suite survives
-      prev.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      prevAqe.fold(
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
     }
   }
 

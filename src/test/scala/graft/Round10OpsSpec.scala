@@ -11,10 +11,6 @@ import graft.functions.Fns
   */
 class Round10OpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   private val dayUs = 86400000000L
 
   /** Events projected to the integer-µs fields the replays use. */

@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class Round10bOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   // ---- an5 --------------------------------------------------------
 
   test("an5: the uniqueness census replays exactly from the QI class " +

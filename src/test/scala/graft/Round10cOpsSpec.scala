@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class Round10cOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   // ---- g11 --------------------------------------------------------
 
   test("g11: the CMS estimates replay exactly from a local sketch, " +

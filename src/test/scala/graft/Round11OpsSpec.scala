@@ -7,10 +7,6 @@ import org.apache.spark.sql.functions._
   */
 class Round11OpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   // ---- versionStamp -----------------------------------------------
 
   test("versionStamp: real stamp for a local table, changes when the " +

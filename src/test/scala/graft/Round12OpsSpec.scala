@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class Round12OpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   // ---- d16 ----------------------------------------------------------
 
   test("d16: one row per swept width, token mass identical across " +

@@ -10,10 +10,6 @@ import graft.functions.JaroWinklerKernel
   */
 class Round9OpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   private def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
 
   // ---- JaroWinkler kernel ----------------------------------------

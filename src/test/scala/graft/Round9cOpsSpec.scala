@@ -12,10 +12,6 @@ import graft.functions.Fns
   */
 class Round9cOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   private def r2(x: Double) = math.floor(x * 100 + 0.5) / 100
   private def r4(x: Double) = math.floor(x * 1e4 + 0.5) / 1e4
 

@@ -12,10 +12,6 @@ import graft.functions.Fns
   */
 class Round9eOpsSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
-
   /** Events projected to the integer-µs fields the replays use. */
   private lazy val events: Array[(Long, Long, String, Long)] =
     Tables.events(spark, sf)

@@ -37,8 +37,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 class ScanCountSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   /** (maxFileScans, maxKernels) per query, from the adjudicated audit. */
   private val budget: Map[String, (Int, Int)] = {
     val twoScans = Seq("j1_lookup_group_array", "j2_inner_join",

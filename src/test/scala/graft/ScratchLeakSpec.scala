@@ -34,8 +34,6 @@ import graft.operators.GraphOps
   */
 class ScratchLeakSpec extends SparkSpec {
 
-  private val sf = "/root/testdata/sf0.001"
-
   /** Queries whose lazy plans leave (clearable, bounded) scratch
     * persists at the caller — discovered by exhaustive audit at r16
     * and pinned exactly. The graph family's INTERNAL scratch is

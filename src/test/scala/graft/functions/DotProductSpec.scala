@@ -28,7 +28,7 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("native == HOF bit-for-bit (interpreted / no-codegen path)") {
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+    withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val df = rows.toDF("x", "y")
       val both = df.select(
@@ -38,15 +38,6 @@ class DotProductSpec extends SparkSpec {
         assert(java.lang.Double.doubleToLongBits(n) ==
           java.lang.Double.doubleToLongBits(h))
       }
-    }
-  }
-
-  private def withSQLConf(kvs: (String, String)*)(f: => Unit): Unit = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -8,7 +8,7 @@ class MinHashAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def sigs(partitions: Int): Map[String, Seq[Long]] =
-    graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    graft.Tables.documents(spark, sf)
       .select(col("source"), bigramShingles(toks(col("text"))).as("sh"))
       .repartition(partitions)
       .as[(String, Seq[String])]
@@ -24,7 +24,7 @@ class MinHashAggSpec extends SparkSpec {
   }
 
   test("group sketch equals elementwise min of per-doc signatures") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = graft.Tables.documents(spark, sf)
       .select(col("source"), bigramShingles(toks(col("text"))).as("sh"))
       .as[(String, Seq[String])].collect()
     val expected = docs.groupBy(_._1).map { case (src, rows) =>

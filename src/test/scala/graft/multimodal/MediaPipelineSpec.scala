@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class MediaPipelineSpec extends SparkSpec {
   import MediaPipeline._
 
-  private val sf = "/root/testdata/sf0.001"
-
   test("media table: binary payload with typed metadata, stable schema") {
     val m = mediaTable(spark, sf)
     assert(m.schema.map(f => (f.name, f.dataType.typeName)) == Seq(

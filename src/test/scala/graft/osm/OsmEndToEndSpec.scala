@@ -177,6 +177,29 @@ class OsmEndToEndSpec extends SparkSpec {
       ("3001", "1001", "way", "node"))
   }
 
+  test("bikeServices finds the service:bicycle node (P4)") {
+    val rows = OsmAudit.bikeServices(docs).collect()
+    assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("1003", "node")))
+  }
+
+  private def refTypes(d: DataFrame): Map[String, (Long, Long)] =
+    OsmAudit.auditRefTypes(d).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  test("auditRefTypes counts each way's deduped refs by target type (J1)") {
+    // 2001's four refs dedupe to three, plus 2002's two
+    assert(refTypes(docs) == Map("node" -> (5L, 2L)))
+  }
+
+  test("auditRefTypes reports a dangling ref as a null t_type row (J1)") {
+    val dangling = doc("2002")
+      .withColumn("_id", lit("2003"))
+      .withColumn("node_refs", array(lit("9999")))
+    assert(refTypes(docs.unionByName(dangling)) ==
+      Map("node" -> (5L, 2L), (null: String) -> (1L, 1L)))
+  }
+
   test("refDocs inverted index (A4/M3)") {
     val m = OsmAudit.refDocs(docs).collect()
       .map(r => r.getString(0) -> r.getSeq[String](1)).toMap

@@ -77,11 +77,14 @@ class OsmEtlBenchSpec extends SparkSpec {
 
   // ---- OsmChunk (r13: the parallel-parse ingest path) ---------------
 
-  test("nextBoundary matches only real top-level element starts: " +
+  test("findCuts matches only real top-level element starts: " +
     "<node /<way /<relation with a legal follower — never <nd, never " +
     "a longer name, never inside plain text bytes") {
-    def find(s: String): Int =
-      OsmChunk.nextBoundary(s.getBytes("UTF-8"), 0, s.length)
+    val f = Files.createTempFile("boundary", ".osm")
+    def find(s: String): Int = {
+      Files.write(f, s.getBytes("UTF-8"))
+      OsmChunk.findCuts(f.toString, Seq(0L)).headOption.fold(-1)(_.toInt)
+    }
     assert(find("""  <node id="1" lat="0"/>""") == 2)
     assert(find("  <way>") == 2)
     assert(find("""  <relation x="y">""") == 2)

@@ -80,7 +80,7 @@ class DocumentSinksSpec extends SparkSpec {
 
   test("partitioned parquet sink: a filter on the partition key prunes " +
     "directories (PartitionFilters, zero data read for excluded sources)") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = graft.Tables.documents(spark, sf)
     val out = Files.createTempDirectory("graft-part").toString
     PartitionedParquetSink("source").write(docs, out)
     // hive layout on disk
@@ -99,16 +99,15 @@ class DocumentSinksSpec extends SparkSpec {
   test("approx distinct stays within the declared rsd of exact (g5), " +
     "and the query's exact-twin + verdict output agrees") {
     import graft.operators.AnalyticsOps
-    val d = "/root/testdata/sf0.001"
-    val exact = graft.Tables.lineitem(spark, d)
+    val exact = graft.Tables.lineitem(spark, sf)
       .select(countDistinct(col("l_partkey"))).collect().head.getLong(0)
     // the raw-estimate rsd law (what the pre-r11 query output pinned)
-    val approx = graft.Tables.lineitem(spark, d)
+    val approx = graft.Tables.lineitem(spark, sf)
       .agg(approx_count_distinct(col("l_partkey"), 0.02))
       .collect().head.getLong(0)
     assert(math.abs(approx - exact).toDouble / exact < 0.1)
     // the oracle-facing contract: exact twin + bound verdict = 1
-    val row = AnalyticsOps.queries("g5_approx_distinct")(spark, d).head()
+    val row = AnalyticsOps.queries("g5_approx_distinct")(spark, sf).head()
     assert(row.getLong(row.fieldIndex("exact_parts")) == exact)
     assert(row.getLong(row.fieldIndex("within_bound")) == 1L)
   }

@@ -89,15 +89,14 @@ class EventStreamsSpec extends SparkSpec {
   test("file-source stream with Trigger.AvailableNow matches the batch " +
     "aggregation on the bounded events table (SURVEY S1's incremental flavor)") {
     import org.apache.spark.sql.streaming.Trigger
-    val dir = "/root/testdata/sf0.001"
-    val batchDf = graft.Tables.events(spark, dir)
+    val batchDf = graft.Tables.events(spark, sf)
     // file streams read directories; stage the table file into one
     val staged = java.nio.file.Files.createTempDirectory("graft-stream")
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
+      java.nio.file.Paths.get(s"$sf/events.parquet"),
       staged.resolve("events.parquet"))
     val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(spark.read.parquet(s"$sf/events.parquet").schema)
       .parquet(staged.toString)
     // same schema-gated ts normalization as the batch reader, so the
     // streaming and batch paths cannot diverge on the driver's layout

@@ -331,8 +331,7 @@ def bench(sf_dir, cache_name):
     saved = None
     if os.path.exists(official):
         saved = open(official).read()
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_NO_ARCHIVE="1")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     print(f"[run] bench {sf_dir} ...")
     p = subprocess.run(["sbt", "-batch", "runMain graft.Bench"],
                        cwd=REPO, env=env, capture_output=True, text=True)
@@ -359,8 +358,7 @@ def bench_partial(sf_dir, names):
     stdout-only parse silently returned {} and let three noisy flags
     stand un-retried, so scan both streams and strip the prefix."""
     import re
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_NO_ARCHIVE="1")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     p = subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench " + " ".join(sorted(names))],
         cwd=REPO, env=env, capture_output=True, text=True)
