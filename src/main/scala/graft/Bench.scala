@@ -18,13 +18,11 @@ object Bench {
   private[graft] def shortKey(name: String): String = name.takeWhile(_ != '_')
 
   /** `--quick` tier: one representative per operator family — the
-    * pre-split escape valve for when the full surface brushes a
-    * timeout budget (VERDICT r10 #7: have the tier BEFORE it becomes
-    * a forced choice mid-round). Curated, not sampled: each entry is
-    * its family's heaviest REPRESENTATIVE shape (scan+agg, shuffle
-    * join, window, LSH, graph rounds, inverted index, decontam join,
-    * sketch pass, …), so a regression anywhere in the engine moves at
-    * least one quick line. SourceInvariantSpec pins membership ⊆
+    * escape valve for when the full surface brushes a timeout budget.
+    * Curated, not sampled: each entry is its family's heaviest
+    * REPRESENTATIVE shape (scan+agg, shuffle join, window, LSH, graph
+    * rounds, inverted index, decontam join, sketch pass, …), so a
+    * regression anywhere in the engine moves at least one quick line. SourceInvariantSpec pins membership ⊆
     * SparkEntry.queries so a rename can't silently shrink the tier. */
   private[graft] val quickTier: Set[String] = Set(
     "a2_group_count", "g1_rollup", "g11_cms_freq", "j2_inner_join",
@@ -45,10 +43,10 @@ object Bench {
     * partial run (--quick or named queries) that selects any consumer
     * primes-and-times the memo too, so the build cost appears as its
     * own line instead of silently landing on (or vanishing from,
-    * under min-of-two) the first consumer's timing — ADVICE r12. The
-    * gate-coverage spec derives BENCH_X10.json's expected key set
-    * from these names — add a memo here and the gate re-runs or the
-    * suite goes red, by construction. */
+    * under min-of-two) the first consumer's timing. The gate-coverage
+    * spec derives BENCH_X10.json's expected key set from these names —
+    * add a memo here and the gate re-runs or the suite goes red, by
+    * construction. */
   private[graft] val memoBuilds: Seq[(String, Set[String], (org.apache.spark.sql.SparkSession, String) => Unit)] = {
     import graft.operators.{DedupOps, GraphOps, PipelineOps, RetrievalOps}
     def inOrder(memos: Memo[_]*): (org.apache.spark.sql.SparkSession, String) => Unit =
@@ -70,11 +68,17 @@ object Bench {
         inOrder(RetrievalOps.nbDocScores)))
   }
 
+  /** A failed line keeps its cause: `[graft] <name> failed: <class>:
+    * <message>` on stderr, while the line itself records -1. */
+  private def reportFailure(name: String, e: Throwable): Unit =
+    System.err.println(s"[graft] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
     // warmup: JVM + whole-stage-codegen compile paths
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count()
+    catch { case e: Throwable => reportFailure("warmup", e) }
     // Optional args = query names (full or short-key) to bench alone,
     // for local iteration on one operator, or `--quick` for the
     // curated per-family tier. The driver always calls with no args ->
@@ -82,7 +86,7 @@ object Bench {
     // (a partial run must never clobber the record).
     // Flags and names compose: `Bench --quick g5` benches the quick
     // tier plus g5; an unknown dash-prefixed arg fails loudly instead
-    // of silently becoming a never-matching query name (ADVICE r11).
+    // of silently becoming a never-matching query name.
     val (flags, names) = args.partition(_.startsWith("-"))
     val badFlags = flags.filterNot(_ == "--quick")
     require(badFlags.isEmpty, s"unknown flags: ${badFlags.mkString(",")}")
@@ -92,20 +96,16 @@ object Bench {
       if (wanted.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.toSeq.filter { case (n, _) =>
         wanted.contains(n) || wanted.contains(shortKey(n)) }
-    // Full runs prime the shared cross-query memos FIRST and record
-    // the build as its own line in BENCH_FULL.json: gr2–gr5 share the
-    // memoized co-purchase edge list, so whichever ran first used to
-    // absorb the build — making those per-query timings order-
-    // dependent (the VERDICT r9 watchlist item). The build is real
-    // work, so it counts toward the total either way; this only fixes
-    // the ATTRIBUTION.
+    // The shared cross-query memos are primed FIRST and each build is
+    // recorded as its own line in BENCH_FULL.json: otherwise whichever
+    // consumer ran first would absorb the build, making the member
+    // timings order-dependent. The build is real work, so it counts
+    // toward the total either way; this only fixes the ATTRIBUTION.
     // Full runs prime every memo; a partial run primes (and times)
     // the memo names selected PLUS any memo whose consumer family
-    // intersects the selection (ADVICE r12: --quick used to skip the
-    // gr/pipe memo builds, so the first consumer's timed run absorbed
-    // them and quick totals weren't comparable to full totals). The
-    // gate's isolated retrial can still re-measure a flagged memo
-    // line by name, the same way it re-measures a query.
+    // intersects the selection, so quick totals stay comparable to
+    // full totals. The gate's isolated retrial can still re-measure a
+    // flagged memo line by name, the same way it re-measures a query.
     val selectedKeys = selected.map { case (n, _) => shortKey(n) }.toSet
     val memoLines: Seq[(String, Double)] =
       memoBuilds.filter { case (name, consumers, _) =>
@@ -114,10 +114,7 @@ object Bench {
       }.map { case (name, _, prime) =>
         val t0 = System.nanoTime()
         val t = try { prime(spark, sfDir); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[graft] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          -1.0
-        }
+        catch { case e: Throwable => reportFailure(name, e); -1.0 }
         name -> t
       }
     // THREE timed runs per query, min reported, spread recorded —
@@ -125,10 +122,7 @@ object Bench {
     // query list, not back-to-back per query. Back-to-back min-of-3
     // shares one contention window: when the box is loaded for the
     // ~30 s a query's three trials span, all three minima inflate
-    // together and the "min" records the noise (VERDICT r15 #2: the
-    // r15 record read 180.6 s vs 107.5 r14, while a same-box retrial
-    // minutes later measured the worst entries at 1/8 of the recorded
-    // minima — the contention owned whole queries). With full passes,
+    // together and the "min" records the noise. With full passes,
     // a loaded window inflates ONE pass's reading for each query it
     // overlaps; the per-query min across passes (taken ~minutes
     // apart) survives, and the inflation lands in the spread, where
@@ -151,27 +145,27 @@ object Bench {
       }.getOrElse(3))
     val ordered = selected.sortBy(_._1)
     // a failed query reports -1, never a (fast) bogus elapsed time
-    def once(fn: (org.apache.spark.sql.SparkSession, String) =>
+    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try {
         // time FULL materialization of the query's own plan, not
         // df.count(): Catalyst prunes every column count() doesn't
         // need, so a projection-heavy query (cleaning chains,
-        // p1-class selects) was under-measured (VERDICT r12 #3).
+        // p1-class selects) would be under-measured.
         // toRdd executes the final physical plan and produces each
         // output row; count() on the RDD forces every partition.
         fn(spark, sfDir).queryExecution.toRdd.count()
         (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
+      } catch { case e: Throwable => reportFailure(name, e); -1.0 }
     }
     // nRuns FULL passes over the whole list; each query's scratch
     // cache is cleared after its run in EVERY pass, so pass 2/3 time
     // the same cold-cache work as pass 1 (JIT/codegen warmth carries
     // over, which is what min-of-N was for in the first place).
     val passes: Seq[Seq[Double]] = Seq.fill(nRuns) {
-      ordered.map { case (_, fn) =>
-        val t = once(fn)
+      ordered.map { case (name, fn) =>
+        val t = once(name, fn)
         // cached tables some operators persist are per-query scratch
         spark.catalog.clearCache()
         t
@@ -190,12 +184,10 @@ object Bench {
       if (lines.exists(_._2 < 0)) -1.0 else lines.map(_._2).sum
     // The stdout JSON line must fit the driver's 2000-char stdout tail
     // (with sbt's "[success] …" trailer after it) or the driver records
-    // parsed:null — which it did for six straight rounds with full
-    // query names (~2.9k chars), and AGAIN in r9 when even the
-    // short-key map (~2.4k at 172 queries) outgrew the tail. The
-    // stdout record is now TOTALS-ONLY (~90 chars — fits at any
-    // surface size, forever); the per-query map goes exclusively to
-    // BENCH_FULL.json next to the repo for human/judge reading.
+    // parsed:null; a per-query map outgrows it (~2.4k chars even with
+    // short keys at 172 queries). The stdout record is TOTALS-ONLY
+    // (~90 chars, fits at any surface size); the per-query map goes
+    // only to BENCH_FULL.json next to the repo.
     // shortKey uniqueness still pinned: BENCH_FULL keys and the
     // `bench <key>` CLI selection depend on it.
     val shortKeys = results.map(r => shortKey(r._1))
@@ -204,9 +196,9 @@ object Bench {
         shortKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.mkString(","))
     val fullQs = lines.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    // per-query relative spread across the 3 timed runs — the
-    // variance record VERDICT r13 #2 asked for (memo lines are
-    // single-shot builds and carry no spread entry)
+    // per-query relative spread across the timed runs, so a diff can
+    // tell a moved min from box noise (memo lines are single-shot
+    // builds and carry no spread entry)
     val spreads = results.map { case (k, _, sp) =>
       "\"" + k + "\":" + f"$sp%.2f" }.mkString("{", ",", "}")
     val fullLine =
@@ -214,7 +206,8 @@ object Bench {
     if (wanted.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         (fullLine + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () } // read-only cwd must not fail the bench
+      // a read-only cwd must not fail the bench
+      catch { case e: Throwable => reportFailure("BENCH_FULL.json write", e) }
     else
       // partial run: per-query (and per-memo) times for local
       // iteration and the gate's isolated retrial (never the

@@ -1,22 +1,29 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
   * Every query in the engine takes `(SparkSession, sfDir)` and reads
   * its inputs through here, so the same code runs at any scale factor
-  * (and, on a real cluster, against any parquet root). Reads are plain
-  * `spark.read.parquet` relations: Catalyst handles column pruning and
-  * filter pushdown into the scan, which is the scale-critical property
-  * (at 100 TB the scan must only materialize referenced columns).
+  * (and, on a real cluster, against any parquet root). Reads are
+  * parquet relations: Catalyst handles column pruning and filter
+  * pushdown into the scan, which is the scale-critical property (at
+  * 100 TB the scan must only materialize referenced columns).
+  *
+  * A read's schema comes from [[catalog]], so only the first read of a
+  * table version pays Spark's schema-inference job.
   */
 object Tables {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
+  /** The JVM-wide schema catalog every read goes through. */
+  private[graft] val catalog = new SchemaCatalog(versionStamp)
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = catalog.read(spark, dir, name)
     if (name == "events") normalizeEventTs(df) else df
   }
 
@@ -56,17 +63,14 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Cheap dataset-version stamp for the per-session [[Memo]] keys: a hash of the table's file set
-    * (name, length, mtime). Keying a memo on it means a REWRITTEN
-    * dataset at the same path gets a fresh build instead of a silently
-    * stale checkpoint — the staleness hole a path-only key leaves
-    * open. Listing goes through Hadoop's FileSystem (ADVICE r10), so
-    * hdfs:// / s3a:// deployments get REAL stamps too — one metadata
-    * round-trip, never data-sized. Only when the filesystem itself
-    * errors does it fall back to 0 (path-only memoization, the
-    * pre-stamp behavior) — and logs that degradation ONCE per path so
-    * it can't silently re-open the staleness hole it exists to
-    * close. */
+  /** Cheap dataset-version stamp for the [[Memo]] and [[catalog]] keys:
+    * a hash of the table's file set (name, length, mtime). Keying on it
+    * means a REWRITTEN dataset at the same path gets a fresh build or
+    * schema instead of a silently stale one. Listing goes through
+    * Hadoop's FileSystem, so hdfs:// / s3a:// deployments get real
+    * stamps too — one metadata round-trip, never data-sized. A missing
+    * path stamps 0, and so does a filesystem error, which is logged
+    * ONCE per path: 0 means "version unknown" to every caller. */
   def versionStamp(dir: String, table: String): Long = {
     val pathStr = s"$dir/$table.parquet"
     try {
@@ -74,7 +78,7 @@ object Tables {
       // getActiveSession is thread-local; a memo hit from a non-Spark
       // thread must still see spark.hadoop.* (s3a credentials etc.), so
       // fall through to the JVM-global default session before degrading
-      // to a bare Configuration (ADVICE r11).
+      // to a bare Configuration.
       val conf = SparkSession.getActiveSession
         .orElse(SparkSession.getDefaultSession)
         .map(_.sessionState.newHadoopConf())
@@ -97,7 +101,8 @@ object Tables {
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"versionStamp($pathStr) degraded to 0 (path-only memo " +
               s"key — in-session rewrites of this path will NOT " +
-              s"invalidate memos): ${e.getClass.getName}: ${e.getMessage}")
+              s"invalidate memos; its schema is inferred on every " +
+              s"read): ${e.getClass.getName}: ${e.getMessage}")
         }
         0L
     }
@@ -117,11 +122,10 @@ object Tables {
     * carries ≥ defaultParallelism splits and must NEVER pay a
     * corpus-sized round-robin exchange of full document text. The
     * conditional's no-op arm returns `base` ITSELF (reference-equal,
-    * plan untouched) — pinned by the unit law in PlanShapeSpec
-    * (ADVICE r16: at spec scale the spread always fires, so the
-    * plan-shape ratchets alone could not distinguish the conditional
-    * from a regression back to an unconditional round-robin; the
-    * unit law closes that by injecting a pre-partitioned input). */
+    * plan untouched) — pinned by the unit law in PlanShapeSpec, which
+    * injects a pre-partitioned input: at spec scale the spread always
+    * fires, so plan-shape pins alone cannot tell the conditional from
+    * an unconditional round-robin. */
   private[graft] def spreadIfNarrow(s: SparkSession, base: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val par = s.sparkContext.defaultParallelism
     if (base.rdd.getNumPartitions >= par) base else base.repartition(par)
@@ -134,4 +138,52 @@ object Tables {
     * the events ns→µs normalization applies identically. */
   def registerViews(s: SparkSession, d: String): Unit =
     names.foreach(n => apply(s, d, n).createOrReplaceTempView(n))
+}
+
+/** The raw parquet schemas of table versions already read, so a repeated
+  * read of an unchanged table starts no schema-inference job.
+  *
+  * An entry is keyed on the table's path and the reading session's
+  * [[SchemaCatalog.inferenceConfs]], and holds the schema with the
+  * `stamp(dir, table)` it was inferred under. A read is served from the
+  * entry only when its stamp matches; otherwise (a rewritten file set)
+  * it infers again and replaces the entry, so the catalog holds one
+  * schema per path and conf set. Two reads are never cached: one under
+  * a degraded stamp (0: the path is missing or could not be listed), and
+  * one whose inference fails, which throws exactly as a plain
+  * `spark.read.parquet` does. The schema is the raw one; normalization
+  * such as [[Tables.normalizeEventTs]] runs on top of every read.
+  */
+final class SchemaCatalog(stamp: (String, String) => Long) {
+
+  private[graft] val entries = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[Option[String]]), (Long, StructType)]
+
+  def read(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val version = stamp(dir, table)
+    if (version == 0L) spark.read.parquet(path)
+    else {
+      val key = (path, SchemaCatalog.inferenceConfs.map(spark.conf.getOption))
+      entries.get(key) match {
+        case Some((`version`, schema)) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          entries.put(key, (version, df.schema))
+          df
+      }
+    }
+  }
+}
+
+object SchemaCatalog {
+
+  /** The session confs that change the schema parquet inference returns. */
+  val inferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
 }
